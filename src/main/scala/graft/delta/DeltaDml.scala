@@ -291,10 +291,7 @@ object DeltaDml {
     if (matchedUses > 1) matchedCached.unpersist(blocking = false)
 
     val now = Instant.now().toEpochMilli
-    val removes = (fullRemoves ++ dvTargets).map(f =>
-      RemoveFile(f.path, deletionTimestamp = Some(now), dataChange = true,
-        extendedFileMetadata = Some(true), partitionValues = f.partitionValues,
-        size = Some(f.size), deletionVector = f.deletionVector))
+    val removes = (fullRemoves ++ dvTargets).map(_.remove(now))
     val readds = dvTargets.map(f =>
       f.copy(dataChange = true, deletionVector = Some(descriptors(f.path))))
     val protocolUpgrade = dvProtocolUpgrade(snap.protocol)
@@ -311,7 +308,6 @@ object DeltaDml {
         "numRemovedFiles" -> fullRemoves.size.toString,
         "numDeletionVectorsAdded" -> readds.size.toString,
         "numAddedFiles" -> newAdds.size.toString),
-      readVersion = Some(readVersion),
       isBlindAppend = Some(false)): Action) +: {
       // row tracking: UPDATE's appended rows get fresh ids; the DV
       // re-adds keep theirs (same file, same rows — the DV flavor is
@@ -323,23 +319,11 @@ object DeltaDml {
       protocolUpgrade.toSeq ++ rtDomain ++ cdcActions ++ removes ++ readds ++ rtAdds
     }
 
-    val committed =
-      try commitDmlWithRetry(log, path, version, mkActions,
-        removes.map(_.path).toSet, addMatcher(snap, filters))
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          descriptors.headOption.foreach { case (_, d) =>
-            fs.delete(new Path(root,
-              DeletionVectors.dvFileName(DeletionVectors.uuidOfDescriptor(d))), false)
-          }
-          newAdds.foreach(a =>
-            fs.delete(new Path(DeltaRead.resolvePath(path, a.path)), false))
-          DeltaWrite.deleteCdc(fs, path, cdcActions)
-          throw e
-      }
-    if (checkpointInterval > 0 && committed %
-      DeltaLog.checkpointIntervalOf(snap.metadata, checkpointInterval) == 0)
-      log.writeCheckpoint(committed)
+    val dvFile = descriptors.headOption.map { case (_, d) =>
+      DeletionVectors.dvFileName(DeletionVectors.uuidOfDescriptor(d)) }
+    Txn(log, Some(snap), Txn.ReadSet.Matching(addMatcher(snap, filters)), mkActions,
+      staged = dvFile.toSeq ++ newAdds.map(_.path) ++ cdcActions.map(_.path))
+      .commit(checkpointInterval)
     // DML rewrites produce files too — a delta.autoOptimize.autoCompact
     // table compacts after DML exactly like after appends (delta-spark
     // behavior); a separate dataChange=false commit, inert without the
@@ -557,10 +541,7 @@ object DeltaDml {
 
     // ---- commit ---------------------------------------------------------
     val now = Instant.now().toEpochMilli
-    val removes = (fullRemoves ++ partial).map(f =>
-      RemoveFile(f.path, deletionTimestamp = Some(now), dataChange = true,
-        extendedFileMetadata = Some(true), partitionValues = f.partitionValues,
-        size = Some(f.size), deletionVector = f.deletionVector))
+    val removes = (fullRemoves ++ partial).map(_.remove(now))
     val op = if (isDelete) "DELETE" else "UPDATE"
     def mkActions(readVersion: Long): Seq[Action] = CommitInfo(
       timestamp = now,
@@ -572,7 +553,6 @@ object DeltaDml {
         (if (isDelete) "numDeletedRows" else "numUpdatedRows") -> affected.toString,
         "numRemovedFiles" -> removes.size.toString,
         "numAddedFiles" -> adds.size.toString),
-      readVersion = Some(readVersion),
       isBlindAppend = Some(false)) +: {
       // rewrite-flavor DML re-homes surviving rows into new files — they
       // get FRESH row ids (no materialized-column preservation; the DV
@@ -582,18 +562,8 @@ object DeltaDml {
       rtDomain ++ cdcActions ++ rtAdds ++ removes
     }
 
-    val committed =
-      try commitDmlWithRetry(log, path, version, mkActions,
-        removes.map(_.path).toSet, addMatcher(snap, filters))
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          adds.foreach(a => fs.delete(new Path(DeltaRead.resolvePath(path, a.path)), false))
-          DeltaWrite.deleteCdc(fs, path, cdcActions)
-          throw e
-      }
-    if (checkpointInterval > 0 && committed %
-      DeltaLog.checkpointIntervalOf(snap.metadata, checkpointInterval) == 0)
-      log.writeCheckpoint(committed)
+    Txn(log, Some(snap), Txn.ReadSet.Matching(addMatcher(snap, filters)), mkActions,
+      staged = adds.map(_.path) ++ cdcActions.map(_.path)).commit(checkpointInterval)
     DeltaWrite.autoCompactIfNeeded(spark, path, snap.metadata.configuration)
     DmlResult(affected, removes.size, partial.size, adds.size)
   }
@@ -1150,11 +1120,12 @@ object DeltaDml {
           spark, fs, path, version, snap)
       }
 
-    // inserted = rows added minus rows carried over from rewrites (stats
-    // arithmetic, no extra job; falls back to 0-safe math when stats are
-    // absent on foreign-written files)
+    // inserted = rows added minus live rows carried over from rewrites
+    // (stats arithmetic, no extra job). A rewritten file carries only its
+    // live rows, so its deletion-vector cardinality comes off numRecords.
     def rowsOf(fl: Seq[AddFile]): Option[Long] = {
-      val counts = fl.map(f => StatsPruning.parse(f.stats).flatMap(_.numRecords))
+      val counts = fl.map(f =>
+        StatsPruning.parse(f.stats).flatMap(_.numRecords).map(_ - f.dvCardinality))
       if (counts.forall(_.isDefined)) Some(counts.flatten.sum) else None
     }
     // stats arithmetic needs the exact deleted-row count; it is knowable
@@ -1202,10 +1173,7 @@ object DeltaDml {
         .map(s => snap.metadata.copy(schemaString = s.json))
 
     val now = Instant.now().toEpochMilli
-    val removes = removes0.map(f =>
-      RemoveFile(f.path, deletionTimestamp = Some(now), dataChange = true,
-        extendedFileMetadata = Some(true), partitionValues = f.partitionValues,
-        size = Some(f.size), deletionVector = f.deletionVector))
+    val removes = removes0.map(_.remove(now))
     def mkActions(readVersion: Long): Seq[Action] = CommitInfo(
       timestamp = now,
       operation = "MERGE",
@@ -1225,7 +1193,6 @@ object DeltaDml {
         "numTargetRowsInserted" -> inserted.toString,
         "numTargetFilesRemoved" -> removes.size.toString,
         "numTargetFilesAdded" -> adds.size.toString),
-      readVersion = Some(readVersion),
       isBlindAppend = Some(false)) +: {
       val (rtAdds, rtDomain) = RowTracking.assign(RowTracking.enabled(snap),
         RowTracking.highWaterMark(snap), adds, readVersion + 1)
@@ -1246,86 +1213,10 @@ object DeltaDml {
       if (bySource.nonEmpty) _ => true
       else if (keyRanges.isEmpty) _ => false
       else addMatcher(snap, keyRanges)
-    val committed =
-      try commitDmlWithRetry(log, path, version, mkActions,
-        removes.map(_.path).toSet, mergeAddMatcher)
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          adds.foreach(a => fs.delete(new Path(DeltaRead.resolvePath(path, a.path)), false))
-          DeltaWrite.deleteCdc(fs, path, cdcActions)
-          throw e
-      }
-    if (checkpointInterval > 0 && committed %
-      DeltaLog.checkpointIntervalOf(snap.metadata, checkpointInterval) == 0)
-      log.writeCheckpoint(committed)
+    Txn(log, Some(snap), Txn.ReadSet.Matching(mergeAddMatcher), mkActions,
+      staged = adds.map(_.path) ++ cdcActions.map(_.path)).commit(checkpointInterval)
     DeltaWrite.autoCompactIfNeeded(spark, path, snap.metadata.configuration)
-    MergeResult(matchedRows, math.max(inserted, 0L), removes.size, adds.size)
-  }
-
-  /** Conflict-aware optimistic commit for DML — the DML twin of
-    * DeltaWrite.commitWithRetry. Losing the race no longer aborts
-    * unconditionally: each interleaved winner is checked for a LOGICAL
-    * conflict with this DML's read/write sets, and disjoint winners
-    * (appends to other partitions/key ranges, OPTIMIZE rewrites of
-    * untouched files, other DML on non-overlapping files) are rebased
-    * past by re-committing the same actions at the new head.
-    *
-    * Conflict matrix (serializable semantics, conservative):
-    *   - metadata / protocol change        → abort (plan is stale)
-    *   - remove of a file THIS DML removes → abort (write-write: the
-    *     file was concurrently rewritten or deleted)
-    *   - dataChange add that MAY contain rows matching this DML's
-    *     predicate (partition values + file stats cannot exclude it)
-    *     → abort (phantom: a serial execution would have processed
-    *     those rows). dataChange=false adds (compactions) carry no new
-    *     rows and never conflict by themselves — their paired removes
-    *     are caught by the write-write rule when they touch our files.
-    *
-    * Returns the version that committed. On abort the staged add files
-    * are the caller's to clean up (same contract as before). */
-  private[delta] def commitDmlWithRetry(
-      log: DeltaLog,
-      path: String,
-      firstVersion: Long,
-      mkActions: Long => Seq[Action], // readVersion → full action list
-      ourRemovedPaths: Set[String],
-      addMayConflict: AddFile => Boolean,
-      maxAttempts: Int = 20): Long = {
-    var v = firstVersion
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      try {
-        log.writeCommit(v, mkActions(v - 1))
-        return v
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          if (attempt >= maxAttempts) throw e
-          val head = log.latestVersion
-          (v to head).foreach { w =>
-            log.readCommitActions(w).foreach {
-              case _: MetadataAction | _: Protocol =>
-                throw new java.util.ConcurrentModificationException(
-                  s"DML conflicts with a metadata/protocol change at version $w in $path", e)
-              // a concurrent domain-metadata change (e.g. a row-id
-              // allocation moving the delta.rowTracking watermark) makes
-              // our pre-computed domain state stale — abort, don't rebase
-              case _: DomainMetadata =>
-                throw new java.util.ConcurrentModificationException(
-                  s"DML conflicts with a domain-metadata change at version $w in $path", e)
-              case r: RemoveFile if ourRemovedPaths.contains(r.path) =>
-                throw new java.util.ConcurrentModificationException(
-                  s"Write-write conflict: ${r.path} was concurrently removed at version $w in $path", e)
-              case a: AddFile if a.dataChange && addMayConflict(a) =>
-                throw new java.util.ConcurrentModificationException(
-                  s"Phantom conflict: version $w added rows this DML's predicate may match in $path", e)
-              case _ => ()
-            }
-          }
-          v = head + 1
-      }
-    }
-    -1L // unreachable
+    MergeResult(matchedRows, inserted, removes.size, adds.size)
   }
 
   /** File-level "may this add contain predicate-matching rows?" check —

@@ -292,9 +292,7 @@ object DeltaMaintenance {
             stats = Some(DeltaWrite.harvestStats(fs.getConf, dest, harvestSchema)))
         }
       fs.delete(tmp, true)
-      removes :::= files.map(f => RemoveFile(f.path, Some(now), dataChange = false,
-        extendedFileMetadata = Some(true), partitionValues = f.partitionValues,
-        size = Some(f.size), deletionVector = f.deletionVector)).toList
+      removes :::= files.map(_.remove(now, dataChange = false)).toList
       (adds, removes)
     }
 
@@ -328,7 +326,6 @@ object DeltaMaintenance {
       operationMetrics = Map(
         "numRemovedFiles" -> removes.size.toString,
         "numAddedFiles" -> adds.size.toString),
-      readVersion = Some(snap.version),
       isBlindAppend = Some(false))
     // row tracking: compacted files are NEW physical files and get fresh
     // baseRowIds (spec-required on every add; watermark advances), but
@@ -342,30 +339,15 @@ object DeltaMaintenance {
         (RowTracking.MaterializedCommitVersionProp -> rcv)))
     }
     // OPTIMIZE/REORG is dataChange=false: it makes no claim about rows it
-    // did not read, so a concurrent APPEND never conflicts — the new files
-    // simply stay uncompacted. A lost race rebases through the same
-    // conflict matrix as DML (commitDmlWithRetry) with addMayConflict
-    // pinned false; genuine conflicts — a winner removing one of OUR
-    // input files (concurrent DML/OPTIMIZE on the same files), or a
-    // metadata/protocol/domain change (stale plan, stale row-id
-    // watermark) — still abort, and the staged rewrites are cleaned up.
-    // Versioned bits (readVersion, row-id assignment) recompute per
-    // attempt; the watermark BASE from `snap` stays valid because any
-    // winner that moved it carries a DomainMetadata action, which aborts.
+    // did not read, so no concurrent add is a phantom — new files simply
+    // stay uncompacted
     def actionsAt(readV: Long): Seq[Action] = {
       val (rtAdds, rtDomain) = RowTracking.assign(rtEnabled,
         RowTracking.highWaterMark(snap), adds, readV + 1)
-      Seq(commitInfo.copy(readVersion = Some(readV))) ++
-        metaActs ++ rtDomain ++ rtAdds ++ removes
+      Seq(commitInfo) ++ metaActs ++ rtDomain ++ rtAdds ++ removes
     }
-    try DeltaDml.commitDmlWithRetry(log, path, snap.version + 1,
-      rv => actionsAt(rv), removes.map(_.path).toSet, _ => false)
-    catch {
-      case e: java.util.ConcurrentModificationException =>
-        adds.foreach(a =>
-          fs.delete(new Path(DeltaRead.resolvePath(path, a.path)), false))
-        throw e
-    }
+    Txn(log, Some(snap), Txn.ReadSet.Matching(_ => false), actionsAt,
+      staged = adds.map(_.path)).commit()
     (snap.activeFiles.size, snap.activeFiles.size - removes.size + adds.size)
   }
 

@@ -307,6 +307,12 @@ object DeltaTableOps {
 
   final case class CloneResult(tableVersion: Long, clonedFiles: Long)
 
+  /** Commit a metadata/protocol-only change planned against `snap`. It
+    * reads no data files, so it rebases past a concurrent blind append;
+    * returns the version that landed. */
+  private def metadataCommit(log: DeltaLog, snap: Snapshot, actions: Seq[Action]): Long =
+    Txn(log, Some(snap), Txn.ReadSet.Empty, _ => actions).commit()
+
   /** SHALLOW CLONE: create a new Delta table at `targetPath` whose
     * commit 0 re-adds every active file of the source snapshot by
     * ABSOLUTE path — metadata-only, no byte of data is copied, O(files)
@@ -336,7 +342,6 @@ object DeltaTableOps {
     // clone's adds, metadata/protocol replace wholesale, the table id
     // stays (it is the same table, replaced)
     val tgtSnap = if (exists) Some(tgtLog.snapshot(None)) else None
-    val commitV = tgtSnap.map(_.version + 1).getOrElse(0L)
     val now = System.currentTimeMillis()
     val adds = snap.activeFiles.map { f =>
       val abs = DeltaRead.resolvePath(sourcePath, f.path)
@@ -368,7 +373,6 @@ object DeltaTableOps {
       operationMetrics = Map(
         "numClonedFiles" -> adds.size.toString,
         "numOutputRows" -> "0"),
-      readVersion = tgtSnap.map(_.version),
       isBlindAppend = Some(false))
     // a clone of a row-tracking table carries the id watermark too —
     // without it the clone's next append would re-allocate ids the
@@ -376,12 +380,12 @@ object DeltaTableOps {
     val domainActs = snap.domainMetadata.toSeq.map { case (d, cfg) =>
       DomainMetadata(d, cfg)
     }
-    val removes = tgtSnap.toSeq.flatMap(_.activeFiles).map(f =>
-      RemoveFile(f.path, Some(now), dataChange = true,
-        extendedFileMetadata = Some(true), partitionValues = f.partitionValues,
-        size = Some(f.size), deletionVector = f.deletionVector))
-    tgtLog.writeCommit(commitV, Seq(ci, snap.protocol, meta) ++ domainActs ++ adds ++ removes)
-    CloneResult(commitV, adds.size)
+    val removes = tgtSnap.toSeq.flatMap(_.activeFiles).map(_.remove(now))
+    // REPLACE removes the target's listed files: any concurrent file
+    // change to the target aborts it
+    val v = Txn(tgtLog, tgtSnap, Txn.ReadSet.All,
+      _ => Seq(ci, snap.protocol, meta) ++ domainActs ++ adds ++ removes).commit()
+    CloneResult(v, adds.size)
   }
 
   private def hasScheme(p: String): Boolean =
@@ -488,17 +492,16 @@ object DeltaTableOps {
       operationMetrics = Map(
         "numClonedFiles" -> adds.size.toString,
         "numCopiedBytes" -> adds.map(_.size).sum.toString),
-      readVersion = tgtSnap.map(_.version),
       isBlindAppend = Some(false))
     val domainActs = snap.domainMetadata.toSeq.map { case (d, cfg) =>
       DomainMetadata(d, cfg)
     }
-    val removes = tgtSnap.toSeq.flatMap(_.activeFiles).map(f =>
-      RemoveFile(f.path, Some(now), dataChange = true,
-        extendedFileMetadata = Some(true), partitionValues = f.partitionValues,
-        size = Some(f.size), deletionVector = f.deletionVector))
-    tgtLog.writeCommit(commitV, Seq(ci, snap.protocol, meta) ++ domainActs ++ adds ++ removes)
-    CloneResult(commitV, adds.size)
+    val removes = tgtSnap.toSeq.flatMap(_.activeFiles).map(_.remove(now))
+    // REPLACE removes the target's listed files: any concurrent file
+    // change to the target aborts it
+    val v = Txn(tgtLog, tgtSnap, Txn.ReadSet.All,
+      _ => Seq(ci, snap.protocol, meta) ++ domainActs ++ adds ++ removes).commit()
+    CloneResult(v, adds.size)
   }
 
   final case class FsckResult(tableVersion: Long, removedEntries: Long)
@@ -534,15 +537,12 @@ object DeltaTableOps {
     if (missingPaths.isEmpty || dryRun)
       return FsckResult(snap.version, missingPaths.size.toLong)
     val now = System.currentTimeMillis()
-    val removes = snap.activeFiles.filter(f => missingPaths.contains(f.path)).map(f =>
-      RemoveFile(f.path, deletionTimestamp = Some(now), dataChange = true,
-        extendedFileMetadata = Some(true), partitionValues = f.partitionValues,
-        size = Some(f.size), deletionVector = f.deletionVector))
+    val removes = snap.activeFiles.filter(f => missingPaths.contains(f.path)).map(_.remove(now))
     val ci = CommitInfo(now, "FSCK",
       operationMetrics = Map("numRemovedFiles" -> removes.size.toString),
-      readVersion = Some(snap.version), isBlindAppend = Some(false))
-    log.writeCommit(snap.version + 1, Seq(ci) ++ removes)
-    FsckResult(snap.version + 1, removes.size.toLong)
+      isBlindAppend = Some(false))
+    val v = Txn(log, Some(snap), Txn.ReadSet.All, _ => Seq(ci) ++ removes).commit()
+    FsckResult(v, removes.size.toLong)
   }
 
   final case class ConvertResult(numFiles: Long, partitionColumns: Seq[String])
@@ -623,7 +623,7 @@ object DeltaTableOps {
           writerFeatures = Some(
             (DeltaLog.legacyWriterFeatures(Protocol(1, 2)) ++ typeFeats).distinct))
       else Protocol(1, 2)
-    log.writeCommit(0L, Seq(ci, proto, meta) ++ adds)
+    Txn(log, None, Txn.ReadSet.Empty, _ => Seq(ci, proto, meta) ++ adds).commit()
     ConvertResult(adds.size, partCols)
   }
 
@@ -667,9 +667,8 @@ object DeltaTableOps {
     val ci = CommitInfo(System.currentTimeMillis(), "SET TBLPROPERTIES",
       operationParameters =
         Map("properties" -> """{"delta.enableChangeDataFeed":"true"}"""),
-      readVersion = Some(snap.version), isBlindAppend = Some(false))
-    log.writeCommit(snap.version + 1, Seq(ci) ++ proto ++ Seq(meta))
-    snap.version + 1
+      isBlindAppend = Some(false))
+    metadataCommit(log, snap, Seq(ci) ++ proto ++ Seq(meta))
   }
 
   /** ALTER TABLE … SET TBLPROPERTIES (generic): merge the given
@@ -705,9 +704,8 @@ object DeltaTableOps {
     val ci = CommitInfo(System.currentTimeMillis(), "SET TBLPROPERTIES",
       operationParameters = Map("properties" ->
         props.map { case (k, v) => s""""$k":"$v"""" }.mkString("{", ",", "}")),
-      readVersion = Some(snap.version), isBlindAppend = Some(false))
-    log.writeCommit(snap.version + 1, Seq(ci, meta))
-    snap.version + 1
+      isBlindAppend = Some(false))
+    metadataCommit(log, snap, Seq(ci, meta))
   }
 
   /** ALTER TABLE … ALTER COLUMN … TYPE — type widening (the
@@ -785,11 +783,9 @@ object DeltaTableOps {
       operationParameters = Map("column" -> column,
         "fromType" -> field.dataType.simpleString,
         "toType" -> newType.simpleString),
-      readVersion = Some(snap.version), isBlindAppend = Some(false))
-    log.writeCommit(snap.version + 1,
-      Seq(ci) ++ protocol.toSeq ++
-        Seq(snap.metadata.copy(schemaString = widened.json)))
-    snap.version + 1
+      isBlindAppend = Some(false))
+    metadataCommit(log, snap,
+      Seq(ci) ++ protocol.toSeq ++ Seq(snap.metadata.copy(schemaString = widened.json)))
   }
 
   /** Liquid clustering (writer feature `clustering` + the
@@ -828,9 +824,8 @@ object DeltaTableOps {
         removed = false)
     val ci = CommitInfo(System.currentTimeMillis(), "CLUSTER BY",
       operationParameters = Map("clusterBy" -> columns.mkString(",")),
-      readVersion = Some(snap.version), isBlindAppend = Some(false))
-    log.writeCommit(snap.version + 1, Seq(ci) ++ protocol.toSeq ++ Seq(domain))
-    snap.version + 1
+      isBlindAppend = Some(false))
+    metadataCommit(log, snap, Seq(ci) ++ protocol.toSeq ++ Seq(domain))
   }
 
   private[delta] val ClusteringDomain = "delta.clustering"
@@ -923,9 +918,8 @@ object DeltaTableOps {
       operationParameters = Map(
         "minReaderVersion" -> minReader.toString,
         "minWriterVersion" -> minWriter.toString),
-      readVersion = Some(snap.version), isBlindAppend = Some(false))
-    log.writeCommit(snap.version + 1, Seq(ci, next))
-    snap.version + 1
+      isBlindAppend = Some(false))
+    metadataCommit(log, snap, Seq(ci, next))
   }
 
   /** ALTER TABLE … UNSET TBLPROPERTIES: remove configuration keys in one
@@ -955,9 +949,8 @@ object DeltaTableOps {
     val meta = snap.metadata.copy(configuration = snap.metadata.configuration -- keys)
     val ci = CommitInfo(System.currentTimeMillis(), "UNSET TBLPROPERTIES",
       operationParameters = Map("properties" -> keys.mkString("[", ",", "]")),
-      readVersion = Some(snap.version), isBlindAppend = Some(false))
-    log.writeCommit(snap.version + 1, Seq(ci, meta))
-    snap.version + 1
+      isBlindAppend = Some(false))
+    metadataCommit(log, snap, Seq(ci, meta))
   }
 
   /** DESCRIBE DETAIL: a one-row table summary straight from the snapshot
@@ -1017,9 +1010,10 @@ object DeltaTableOps {
     if (snap.metadata.configuration.get("delta.enableInCommitTimestamps")
         .exists(_.trim.equalsIgnoreCase("true")))
       return snap.version // idempotent
-    val version = snap.version + 1
     val now = System.currentTimeMillis()
-    val meta = snap.metadata.copy(configuration =
+    // the provenance names the version the enablement lands at, so it is
+    // recomputed per attempt
+    def meta(version: Long) = snap.metadata.copy(configuration =
       snap.metadata.configuration +
         ("delta.enableInCommitTimestamps" -> "true") +
         ("delta.inCommitTimestampEnablementVersion" -> version.toString) +
@@ -1033,9 +1027,9 @@ object DeltaTableOps {
     val ci = CommitInfo(now, "SET TBLPROPERTIES",
       operationParameters =
         Map("properties" -> """{"delta.enableInCommitTimestamps":"true"}"""),
-      readVersion = Some(snap.version), isBlindAppend = Some(false))
-    log.writeCommit(version, Seq(ci) ++ proto ++ Seq(meta))
-    version
+      isBlindAppend = Some(false))
+    Txn(log, Some(snap), Txn.ReadSet.Empty,
+      readVersion => Seq(ci) ++ proto ++ Seq(meta(readVersion + 1))).commit()
   }
 
   def addCheckConstraint(
@@ -1069,9 +1063,11 @@ object DeltaTableOps {
       else Seq(snap.protocol.copy(minWriterVersion = 3))
     val ci = CommitInfo(now, "ADD CONSTRAINT",
       operationParameters = Map("name" -> name, "expr" -> exprSql),
-      readVersion = Some(snap.version), isBlindAppend = Some(false))
-    log.writeCommit(snap.version + 1, Seq(ci) ++ proto ++ Seq(meta))
-    ConstraintResult(snap.version + 1, name)
+      isBlindAppend = Some(false))
+    // the violation scan validated the listed files: any concurrent file
+    // change aborts the commit
+    val v = Txn(log, Some(snap), Txn.ReadSet.All, _ => Seq(ci) ++ proto ++ Seq(meta)).commit()
+    ConstraintResult(v, name)
   }
 
   /** ALTER TABLE … DROP CONSTRAINT. Protocol is never downgraded (the
@@ -1088,9 +1084,8 @@ object DeltaTableOps {
       configuration = snap.metadata.configuration - key)
     val ci = CommitInfo(System.currentTimeMillis(), "DROP CONSTRAINT",
       operationParameters = Map("name" -> name),
-      readVersion = Some(snap.version), isBlindAppend = Some(false))
-    log.writeCommit(snap.version + 1, Seq(ci, meta))
-    ConstraintResult(snap.version + 1, name)
+      isBlindAppend = Some(false))
+    ConstraintResult(metadataCommit(log, snap, Seq(ci, meta)), name)
   }
 
   final case class MappingResult(tableVersion: Long, maxColumnId: Long)
@@ -1156,9 +1151,8 @@ object DeltaTableOps {
     }
     val ci = CommitInfo(System.currentTimeMillis(), "SET TBLPROPERTIES",
       operationParameters = Map("delta.columnMapping.mode" -> "name"),
-      readVersion = Some(snap.version), isBlindAppend = Some(false))
-    log.writeCommit(snap.version + 1, Seq(ci) ++ proto ++ Seq(meta))
-    MappingResult(snap.version + 1, nextId)
+      isBlindAppend = Some(false))
+    MappingResult(metadataCommit(log, snap, Seq(ci) ++ proto ++ Seq(meta)), nextId)
   }
 
   /** ALTER TABLE … RENAME COLUMN — metadata-only under column mapping:
@@ -1184,9 +1178,8 @@ object DeltaTableOps {
         .map(c => if (c == oldName) newName else c))
     val ci = CommitInfo(System.currentTimeMillis(), "RENAME COLUMN",
       operationParameters = Map("from" -> oldName, "to" -> newName),
-      readVersion = Some(snap.version), isBlindAppend = Some(false))
-    log.writeCommit(snap.version + 1, Seq(ci, meta))
-    MappingResult(snap.version + 1,
+      isBlindAppend = Some(false))
+    MappingResult(metadataCommit(log, snap, Seq(ci, meta)),
       snap.metadata.configuration.get("delta.columnMapping.maxColumnId")
         .map(_.toLong).getOrElse(0L))
   }
@@ -1210,9 +1203,8 @@ object DeltaTableOps {
     val meta = snap.metadata.copy(schemaString = newSchema.json)
     val ci = CommitInfo(System.currentTimeMillis(), "DROP COLUMN",
       operationParameters = Map("column" -> name),
-      readVersion = Some(snap.version), isBlindAppend = Some(false))
-    log.writeCommit(snap.version + 1, Seq(ci, meta))
-    MappingResult(snap.version + 1,
+      isBlindAppend = Some(false))
+    MappingResult(metadataCommit(log, snap, Seq(ci, meta)),
       snap.metadata.configuration.get("delta.columnMapping.maxColumnId")
         .map(_.toLong).getOrElse(0L))
   }
@@ -1248,10 +1240,7 @@ object DeltaTableOps {
     DeltaWrite.requireNotAppendOnly(snap, "TRUNCATE")
     if (snap.activeFiles.isEmpty) return TruncateResult(snap.version, 0L, 0L)
     val now = System.currentTimeMillis()
-    val removes = snap.activeFiles.map(f =>
-      RemoveFile(f.path, deletionTimestamp = Some(now), dataChange = true,
-        extendedFileMetadata = Some(true), partitionValues = f.partitionValues,
-        size = Some(f.size), deletionVector = f.deletionVector))
+    val removes = snap.activeFiles.map(_.remove(now))
     val statRows = snap.activeFiles.map(f =>
       StatsPruning.parse(f.stats).flatMap(_.numRecords).map(_ - f.dvCardinality))
     val removedRows: Long =
@@ -1268,14 +1257,10 @@ object DeltaTableOps {
       operationMetrics = Map(
         "numRemovedFiles" -> removes.size.toString,
         "numDeletedRows" -> removedRows.toString),
-      readVersion = Some(snap.version), isBlindAppend = Some(false))
-    try log.writeCommit(snap.version + 1, Seq(ci) ++ cdcActions ++ removes)
-    catch {
-      case e: Throwable =>
-        DeltaWrite.deleteCdc(fs, path, cdcActions)
-        throw e
-    }
-    TruncateResult(snap.version + 1, removes.size.toLong, removedRows)
+      isBlindAppend = Some(false))
+    val v = Txn(log, Some(snap), Txn.ReadSet.All, _ => Seq(ci) ++ cdcActions ++ removes,
+      staged = cdcActions.map(_.path)).commit()
+    TruncateResult(v, removes.size.toLong, removedRows)
   }
 
   /** ALTER TABLE … ALTER COLUMN c SET DEFAULT expr — column defaults
@@ -1344,10 +1329,9 @@ object DeltaTableOps {
           (DeltaLog.legacyWriterFeatures(snap.protocol) :+ "allowColumnDefaults").distinct)))
     val ci = CommitInfo(System.currentTimeMillis(), "SET DEFAULT",
       operationParameters = Map("column" -> field.name, "expr" -> exprSql),
-      readVersion = Some(snap.version), isBlindAppend = Some(false))
-    log.writeCommit(snap.version + 1,
+      isBlindAppend = Some(false))
+    metadataCommit(log, snap,
       Seq(ci) ++ proto ++ Seq(snap.metadata.copy(schemaString = updated.json)))
-    snap.version + 1
   }
 
   /** ALTER TABLE … ALTER COLUMN c DROP DEFAULT — removes the
@@ -1369,10 +1353,8 @@ object DeltaTableOps {
     })
     val ci = CommitInfo(System.currentTimeMillis(), "DROP DEFAULT",
       operationParameters = Map("column" -> column),
-      readVersion = Some(snap.version), isBlindAppend = Some(false))
-    log.writeCommit(snap.version + 1,
-      Seq(ci, snap.metadata.copy(schemaString = updated.json)))
-    snap.version + 1
+      isBlindAppend = Some(false))
+    metadataCommit(log, snap, Seq(ci, snap.metadata.copy(schemaString = updated.json)))
   }
 
   /** The per-column default expressions a snapshot declares
@@ -1661,14 +1643,20 @@ object DeltaTableOps {
         // remaining implied features stay enumerated as obligations)
         if (newReader.isEmpty) 1 else 3,
         7, newReader, newWriter)
-    val version = snap.version + 1
     val ci = CommitInfo(System.currentTimeMillis(), "DROP FEATURE",
       operationParameters = Map("feature" -> feature,
         "truncateHistory" -> truncateHistory.toString),
-      readVersion = Some(snap.version), isBlindAppend = Some(false))
-    log.writeCommit(version,
-      Seq(ci, newProtocol) ++ metaAction.toSeq ++ domainAction.toSeq)
+      isBlindAppend = Some(false))
+    // the in-use gates of deletionVectors and typeWidening inspected the
+    // listed files: a concurrent file change aborts those drops
+    val readSet =
+      if (feature == "deletionVectors" || feature == "typeWidening") Txn.ReadSet.All
+      else Txn.ReadSet.Empty
     // checkpoint the downgraded state so replay never crosses a DV action
+    // (unconditionally, hence no cadence checkpoint)
+    val version = Txn(log, Some(snap), readSet,
+      _ => Seq(ci, newProtocol) ++ metaAction.toSeq ++ domainAction.toSeq)
+      .commit(checkpointInterval = 0)
     log.writeCheckpoint(version)
     val removed =
       if (!truncateHistory) 0
@@ -1883,9 +1871,8 @@ object DeltaTableOps {
         else snap.metadata.configuration)
     val ci = CommitInfo(System.currentTimeMillis(), "ADD COLUMN",
       operationParameters = Map("column" -> name, "type" -> dataType.simpleString),
-      readVersion = Some(snap.version), isBlindAppend = Some(false))
-    log.writeCommit(snap.version + 1, Seq(ci, meta))
-    MappingResult(snap.version + 1, nextId)
+      isBlindAppend = Some(false))
+    MappingResult(metadataCommit(log, snap, Seq(ci, meta)), nextId)
   }
 
   /** RESTORE TABLE … TO VERSION: one new commit that returns the table's
@@ -1928,9 +1915,7 @@ object DeltaTableOps {
       .map(_.copy(dataChange = true))
     val removes = current.activeFiles
       .filterNot(f => targetIncs.contains(incarnation(f.path, f.deletionVector)))
-      .map(f => RemoveFile(f.path, Some(now), dataChange = true,
-        partitionValues = f.partitionValues, size = Some(f.size),
-        deletionVector = f.deletionVector))
+      .map(_.remove(now))
     if (removes.nonEmpty) DeltaWrite.requireNotAppendOnly(current, "RESTORE")
 
     // a restored file — or its target incarnation's DV file — may have
@@ -1997,17 +1982,21 @@ object DeltaTableOps {
           frames += DeltaDml.readFiles(spark, path, target, adds)
             .withColumn(ct, lit("insert"))
         DeltaWrite.stageCdc(frames.result().reduce(_ unionByName _),
-          spark, fsc, path, latest + 1, current)
+          spark, fsc, path, current.version + 1, current)
       }
     val ci = CommitInfo(now, "RESTORE",
       operationParameters = Map("version" -> toVersion.toString),
       operationMetrics = Map(
         "numRestoredFiles" -> adds.size.toString,
         "numRemovedFiles" -> removes.size.toString),
-      readVersion = Some(latest), isBlindAppend = Some(false))
+      isBlindAppend = Some(false))
     val meta = if (metaChanged) Seq(target.metadata) else Nil
-    log.writeCommit(latest + 1, Seq(ci) ++ meta ++ cdcActions ++ adds ++ removes)
-    RestoreResult(latest + 1, adds.size, removes.size)
+    // the diff is against the listed head files: any concurrent file
+    // change aborts the restore and deletes its staged change data
+    val v = Txn(log, Some(current), Txn.ReadSet.All,
+      _ => Seq(ci) ++ meta ++ cdcActions ++ adds ++ removes,
+      staged = cdcActions.map(_.path)).commit()
+    RestoreResult(v, adds.size, removes.size)
   }
 
   /** Batch change feed over a commit range: per version in

@@ -111,10 +111,6 @@ object RowTracking {
     val snap = log.snapshot(None)
     DeltaWrite.requireWriterSupported(snap)
     if (enabled(snap)) return snap.version
-    val version = snap.version + 1
-    val (backfilled, domainActs) =
-      assign(enabled = true, waterMark = highWaterMark(snap),
-        snap.activeFiles.map(_.copy(dataChange = false)), version)
     val meta = snap.metadata.copy(configuration =
       snap.metadata.configuration + (Prop -> "true"))
     val proto = {
@@ -127,10 +123,15 @@ object RowTracking {
     val ci = CommitInfo(System.currentTimeMillis(), "SET TBLPROPERTIES",
       operationParameters =
         Map("properties" -> s"""{"$Prop":"true"}"""),
-      readVersion = Some(snap.version), isBlindAppend = Some(false))
-    log.writeCommit(version,
-      Seq(ci) ++ proto ++ Seq(meta) ++ domainActs ++ backfilled)
-    version
+      isBlindAppend = Some(false))
+    // the backfill re-adds every listed file: any concurrent file change
+    // makes that list stale
+    Txn(log, Some(snap), Txn.ReadSet.All, { readVersion =>
+      val (backfilled, domainActs) =
+        assign(enabled = true, waterMark = highWaterMark(snap),
+          snap.activeFiles.map(_.copy(dataChange = false)), readVersion + 1)
+      Seq(ci) ++ proto ++ Seq(meta) ++ domainActs ++ backfilled
+    }).commit()
   }
 
   /** Snapshot scan with `_row_id` and `_row_commit_version` columns.

@@ -6,8 +6,8 @@ import scala.concurrent.{Await, Future}
 import scala.concurrent.duration._
 import scala.concurrent.ExecutionContext.Implicits.global
 
-/** Optimistic concurrency: blind appends retry past concurrent winners;
-  * logical conflicts (schema/protocol/txn) abort. */
+/** Optimistic concurrency through [[Txn]]: blind appends retry past
+  * concurrent winners; logical conflicts (schema/protocol/txn) abort. */
 class ConcurrencySpec extends GraftSuite {
 
   private def tmp(): String = {
@@ -28,11 +28,11 @@ class ConcurrencySpec extends GraftSuite {
     val path = tmp()
     GraftDelta.toDelta(Seq((1L, "a")).toDF("id", "v"), path)
     val log = DeltaLog.forTable(spark, path)
+    val read = log.snapshot(None)
     plainCommit(log, 1) // someone else won version 1
-    val got = DeltaWrite.commitWithRetry(log, 1L,
-      v => Seq(CommitInfo(Instant.now().toEpochMilli, "WRITE",
-        Map("mode" -> "Append"), Map.empty, Some(v - 1), Some(true))),
-      retriable = true, txn = None)
+    val got = Txn(log, Some(read), Txn.ReadSet.Empty,
+      rv => Seq(CommitInfo(Instant.now().toEpochMilli, "WRITE",
+        Map("mode" -> "Append"), Map.empty, Some(rv), Some(true)))).commit()
     assert(got == 2L, s"retry must land at version 2, got $got")
     assert(log.latestVersion == 2L)
   }
@@ -48,27 +48,24 @@ class ConcurrencySpec extends GraftSuite {
       schemaString = meta.schema.json, partitionColumns = Nil,
       configuration = Map.empty, createdTime = None)))
     intercept[java.util.ConcurrentModificationException] {
-      DeltaWrite.commitWithRetry(log, 1L,
-        v => Seq(CommitInfo(Instant.now().toEpochMilli, "WRITE",
-          Map("mode" -> "Append"), Map.empty, Some(v - 1), Some(true))),
-        retriable = true, txn = None)
+      Txn(log, Some(meta), Txn.ReadSet.Empty,
+        rv => Seq(CommitInfo(Instant.now().toEpochMilli, "WRITE",
+          Map("mode" -> "Append"), Map.empty, Some(rv), Some(true)))).commit()
     }
 
     val path2 = tmp()
     GraftDelta.toDelta(Seq((1L, "a")).toDF("id", "v"), path2)
     val log2 = DeltaLog.forTable(spark, path2)
+    val read2 = log2.snapshot(None)
     plainCommit(log2, 1, Seq(SetTransaction("sink-app", 7L)))
+    def append(txn: SetTransaction): Long = Txn(log2, Some(read2), Txn.ReadSet.Empty,
+      rv => Seq(CommitInfo(Instant.now().toEpochMilli, "WRITE",
+        Map("mode" -> "Append"), Map.empty, Some(rv), Some(true)), txn)).commit()
     intercept[java.util.ConcurrentModificationException] {
-      DeltaWrite.commitWithRetry(log2, 1L,
-        v => Seq(CommitInfo(Instant.now().toEpochMilli, "WRITE",
-          Map("mode" -> "Append"), Map.empty, Some(v - 1), Some(true))),
-        retriable = true, txn = Some(SetTransaction("sink-app", 8L)))
+      append(SetTransaction("sink-app", 8L))
     }
     // a different appId does not conflict
-    val ok = DeltaWrite.commitWithRetry(log2, 1L,
-      v => Seq(CommitInfo(Instant.now().toEpochMilli, "WRITE",
-        Map("mode" -> "Append"), Map.empty, Some(v - 1), Some(true))),
-      retriable = true, txn = Some(SetTransaction("other-app", 1L)))
+    val ok = append(SetTransaction("other-app", 1L))
     assert(ok == 2L)
   }
 
@@ -114,8 +111,8 @@ class ConcurrencySpec extends GraftSuite {
       CommitInfo(1L, "DELETE", readVersion = Some(rv), isBlindAppend = Some(false)),
       RemoveFile(fileA.path, Some(1L), dataChange = true,
         partitionValues = fileA.partitionValues))
-    def attempt(v: Long) = DeltaDml.commitDmlWithRetry(
-      log, path, v, ourActions, Set(fileA.path), matcher)
+    def attempt(v: Long) = Txn(log, Some(log.snapshot(Some(v - 1))),
+      Txn.ReadSet.Matching(matcher), ourActions).commit()
 
     // disjoint blind append to partition b → rebase succeeds at head+1
     plainCommit(log, 1, Seq(AddFile("p=b/w1.parquet", Map("p" -> "b"))))
@@ -232,9 +229,10 @@ class ConcurrencySpec extends GraftSuite {
   }
 
   /** Identity allocation and row-id allocation are version-dependent and
-    * watermark-based, so their appends are NON-retriable by design: a
-    * racing allocator either wins its version or aborts loudly — it can
-    * never rebase past a winner and hand out the same ids twice. The
+    * watermark-based: a winner that allocated carries the watermark (a
+    * metadata action or the row-tracking domain), so a racing allocator
+    * either wins its version or aborts loudly — it can never rebase past
+    * such a winner and hand out the same ids twice. The
     * invariant pinned here is the one that matters downstream: whatever
     * subset of racers commits, every id in the table is unique and the
     * watermark covers the maximum. */

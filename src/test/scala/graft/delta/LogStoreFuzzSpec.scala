@@ -51,8 +51,8 @@ class FuzzRacyFs extends RawLocalFileSystem {
   * DML/OPTIMIZE losing a conflict race aborts with
   * ConcurrentModificationException by design — those are counted, their
   * effects excluded from the expectation, and the invariants hold across
-  * whichever interleaving the scheduler produced. Appends are retriable
-  * (commitWithRetry rebases past disjoint winners) so they virtually
+  * whichever interleaving the scheduler produced. Appends rebase
+  * past disjoint winners (Txn) so they virtually
   * always land; the seed guarantees the op MIX is reproducible even
   * though the interleaving is not.
   */

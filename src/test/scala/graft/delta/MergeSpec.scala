@@ -38,6 +38,24 @@ class MergeSpec extends GraftSuite {
     assert(h.head.getString(1) == "MERGE")
   }
 
+  test("inserted count is exact when the rewritten file carries a deletion vector") {
+    import spark.implicits._
+    val path = tmp()
+    GraftDelta.toDelta(
+      (1 to 100).map(i => (i.toLong, s"old$i")).toDF("k", "v").coalesce(1), path)
+    GraftDelta.deleteWhereWithDv(spark, path, Seq(Seq(Predicate("k", "<=", 10L))))
+    // one matched key in the DV-carrying file, five inserts: the rewrite
+    // carries the file's 90 live rows, not its 100 physical ones
+    val source = (Seq((50L, "new50")) ++ (200 to 204).map(i => (i.toLong, s"ins$i")))
+      .toDF("k", "v")
+    val res = GraftDelta.mergeInto(spark, path, source, on = Seq("k"))
+    assert(res.matchedRows == 1 && res.insertedRows == 5, res.toString)
+    val log = DeltaLog.forTable(spark, path)
+    val metrics = log.commitInfoOf(log.latestVersion).get.operationMetrics
+    assert(metrics("numTargetRowsInserted") == "5", metrics.toString)
+    assert(GraftDelta.readDelta(spark, path).count() == 95)
+  }
+
   test("key-range pruning: a narrow source leaves out-of-range files untouched") {
     import spark.implicits._
     val path = tmp()

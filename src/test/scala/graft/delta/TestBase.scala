@@ -40,8 +40,12 @@ object TestBase {
   def fixture(name: String): String = {
     val out = Files.createTempDirectory(s"graft_fix_$name")
     out.toFile.deleteOnExit()
-    val zin = new ZipInputStream(
+    val zin = try new ZipInputStream(
       Files.newInputStream(Paths.get(s"/root/reference/tests/data/$name.zip")))
+    catch {
+      case e: java.nio.file.NoSuchFileException =>
+        throw new IllegalStateException(s"reference fixtures absent: ${e.getFile}", e)
+    }
     try {
       var e = zin.getNextEntry
       while (e != null) {
